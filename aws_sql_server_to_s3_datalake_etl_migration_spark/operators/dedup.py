@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import with_coalesced_cached_rounds
+from ..session import fixed_point, with_coalesced_cached_rounds
 from pyspark.sql.window import Window
 
 from .textops import tokens
@@ -686,10 +686,11 @@ def connected_components(
     Raises if ``max_iter`` rounds don't converge (pathological chain
     — raise the budget explicitly rather than silently returning
     half-merged clusters; for graphs whose diameter is NOT shallow,
-    use ``operators.graph.star_connected_components`` — O(log n)
-    rounds — which is what ``graph.connected_components`` now runs;
-    this loop stays for the NULL-id-tolerant near-dup clusters it
-    was built for).
+    use ``operators.graph.connected_components`` — star contraction,
+    O(log n) rounds; this loop stays for the NULL-id-tolerant near-dup
+    clusters it was built for, where it measured faster). The
+    returned frame is persisted and materialized; the caller owns
+    it.
 
     SINGLE-REFERENCE rounds (fixed round 11): the original round
     referenced ``labels`` twice (neighbor-min join + a keep-own-label
@@ -702,13 +703,13 @@ def connected_components(
     previous round's persisted frame — the plan grows linearly like
     the PageRank loop, with no lineage checkpointing (this engine
     bans ``localCheckpoint``: a table-sized frame must never pin
-    itself in executor storage). Convergence is ONE scalar action
-    per round: labels never increase (each is the min of a set
-    containing itself), so the exact DECIMAL(38,0) label sum is
-    strictly decreasing until the fixed point — sum unchanged ⟺ no
-    label changed — and that same aggregate doubles as the round's
-    persist materialization (NULL-id singletons sit outside the sum
-    and never change)."""
+    itself in executor storage). Convergence (``session.fixed_point``)
+    is ONE scalar action per round: labels never increase (each is
+    the min of a set containing itself), so the exact DECIMAL(38,0)
+    label sum is strictly decreasing until the fixed point — sum
+    unchanged ⟺ no label changed — and that same aggregate doubles
+    as the round's persist materialization (NULL-id singletons sit
+    outside the sum and never change)."""
     # both directions from ONE reference (explode, not union — r15,
     # guide §1.2): the union shape evaluated the caller's pair
     # pipeline TWICE inside edges_all's materialization (for
@@ -718,65 +719,58 @@ def connected_components(
         F.explode(
             F.array(
                 F.struct(
-                    F.col("id_a").alias("src"),
-                    F.col("id_b").alias("dst"),
+                    F.col("id_a").alias("_src"),
+                    F.col("id_b").alias("_dst"),
                 ),
                 F.struct(
-                    F.col("id_b").alias("src"),
-                    F.col("id_a").alias("dst"),
+                    F.col("id_b").alias("_src"),
+                    F.col("id_a").alias("_dst"),
                 ),
             )
         ).alias("e")
-    ).select("e.src", "e.dst")
+    ).select("e._src", "e._dst")
     node_ids = nodes.select(F.col(id_col).alias("id")).distinct()
     # output rows are keyed by src, so srcs outside the node frame
     # must not leak in (the pre-r11 shape only ever emitted node
     # rows); unknown DSTs need no guard — they match no label
     edges_all = (
         edges.join(
-            node_ids.select(F.col("id").alias("src")),
-            "src",
+            node_ids.select(F.col("id").alias("_src")),
+            "_src",
             "left_semi",
         )
         .unionByName(
             node_ids.select(
-                F.col("id").alias("src"), F.col("id").alias("dst")
+                F.col("id").alias("_src"), F.col("id").alias("_dst")
             )
         )
         .distinct()
         .persist()
     )
-    labels = node_ids.withColumn("lbl", F.col("id")).persist()
 
-    def _label_sum(df: DataFrame):
-        return df.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)"))
-        ).collect()[0][0]
+    def one_round(labels: DataFrame) -> DataFrame:
+        # self-loops make this min(own, neighbors) in one pass;
+        # eqNullSafe keeps a NULL node id as a legal singleton
+        return (
+            edges_all.join(
+                labels, edges_all._dst.eqNullSafe(labels[id_col])
+            )
+            .groupBy("_src")
+            .agg(F.min("cluster_id").alias("cluster_id"))
+            .select(F.col("_src").alias(id_col), "cluster_id")
+        )
 
-    prev_sum = _label_sum(labels)  # also materializes the persist
     try:
-        for _ in range(max_iter):
-            # self-loops make this min(own, neighbors) in one pass;
-            # eqNullSafe keeps a NULL node id as a legal singleton
-            new_labels = (
-                edges_all.join(
-                    labels, edges_all.dst.eqNullSafe(labels.id)
-                )
-                .groupBy("src")
-                .agg(F.min("lbl").alias("lbl"))
-                .select(F.col("src").alias("id"), "lbl")
-            ).persist()
-            cur_sum = _label_sum(new_labels)
-            labels.unpersist()
-            labels = new_labels
-            if cur_sum == prev_sum:
-                return labels.select(
-                    F.col("id").alias(id_col), F.col("lbl").alias("cluster_id")
-                )
-            prev_sum = cur_sum
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "raise max_iter for high-diameter graphs"
+        return fixed_point(
+            node_ids.select(
+                F.col("id").alias(id_col), F.col("id").alias("cluster_id")
+            ),
+            one_round,
+            measure=lambda df: df.agg(
+                F.sum(F.col("cluster_id").cast("decimal(38,0)"))
+            ).collect()[0][0],
+            max_rounds=max_iter,
+            name="connected_components",
         )
     finally:
         edges_all.unpersist()

@@ -5,8 +5,8 @@ GraphX/GraphFrames dependency — neither ships in this runtime): a
 graph is a node frame plus an edge frame, and each algorithm is the
 Pregel-on-DataFrame loop — per round, one src-keyed join of state
 onto the edge list and one dst-keyed hash-aggregation, with
-persist/materialize/unpersist per round capping lineage growth (the
-discipline ``connected_components`` and the BPE learner established).
+persist/materialize/unpersist per step capping lineage growth (the
+convergence-driven loops run through ``session.fixed_point``).
 
 Fixed-point arithmetic throughout: scores are int64 at a caller-chosen
 scale and every contribution is a floor division, so two runs — or
@@ -25,48 +25,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import with_coalesced_cached_rounds
+from ..session import fixed_point, with_coalesced_cached_rounds
 
-# Peel/h-index waves chained per persist+action materialization in
-# k_core and coreness (r14 optimization, guide §1.2: the per-step
-# persist + scalar action + AQE barriers dominate wall clock on small
-# per-round frames, so fewer materializations with deeper
-# single-reference chains win until codegen/analysis depth bites —
-# 3 measured best on the registered link graph; 2 was the r13 value).
-# The convergence tests stay EXACT at step granularity for ANY depth:
-# both loops' measures (edge count / estimate sum) are monotone
-# non-increasing per inner wave, so "unchanged across a step" still
-# means every inner wave was a no-op, i.e. the fixed point; at worst
-# _WAVES_PER_STEP - 1 redundant waves run after convergence.
-# max_iter contract (unchanged in kind from the r13 double-step): the
-# loop runs ceil(max_iter/_WAVES_PER_STEP) steps, so up to
-# _WAVES_PER_STEP - 1 extra waves may execute before the bound
-# raises — a safety valve, not an exact budget; estimates/edge sets
-# only shrink, so extra waves only land closer to the fixed point.
+# Peel waves / h-index rounds chained per materialization in k_core and
+# coreness (``fixed_point`` explains the cadence, why the convergence
+# test stays exact at step granularity, and the max_iter contract);
+# 3 measured best on the registered link graph.
 _WAVES_PER_STEP = 3
 
 __all__ = [
     "neighborhood_growth",
     "pagerank_fixedpoint",
     "connected_components",
-    "star_connected_components",
-    "pointer_jump_components",
     "triangle_count",
     "k_core",
     "coreness",
 ]
-
-# Pointer-jump rounds chained per persist+action materialization in
-# pointer_jump_components (r15, guide §1.2 — same cadence trick as
-# _WAVES_PER_STEP below: per-step persist + scalar action + AQE
-# barriers dominate on small per-round frames, and every round
-# references its input exactly once, so a chained pair is a depth-2
-# single-reference plan with linear Catalyst analysis). Convergence
-# stays exact at step granularity: labels are non-increasing per node,
-# so "sum unchanged across a step" still means both inner rounds were
-# no-ops, i.e. the fixed point; at worst one redundant (cheap,
-# label-sized) round runs after convergence.
-_JUMPS_PER_STEP = 2
 
 
 @with_coalesced_cached_rounds
@@ -173,64 +147,6 @@ def pagerank_fixedpoint(
         return scores
     finally:
         edges_deg.unpersist()
-
-
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    *,
-    node_col: str = "node",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 20,
-    algo: str = "star",
-) -> DataFrame:
-    """Weakly connected components: every node labeled with the
-    smallest node id reachable over the (undirected) edge set.
-    Returns ``(node_col, component)``; singletons keep their own id.
-
-    Implementation (upgraded round 11, second batch): the default
-    delegate is ``star_connected_components`` below — alternating
-    large-star / small-star contraction, O(log n) rounds — after the
-    entity-resolution edit graph at sf0.1 exposed the prior
-    smallest-label-propagation delegate as a rounds-=-diameter
-    latent scale-killer (diameter 50 there; unbounded on a web
-    graph). ``algo="pointer_jump"`` selects
-    ``pointer_jump_components`` instead (integral ids only) — the
-    FastSV-style hooking/doubling loop whose rounds shuffle
-    label-sized frames instead of the edge multiset. The r15
-    same-session A/B (min-of-5, sf0.1): on the diameter-50 ER edit
-    graph star wins (4.20 vs 5.23 s — every catalog graph is SPARSE,
-    m ≈ |V|, so pointer-jump's smaller per-round shuffle volume buys
-    nothing and its extra per-round stages cost); on the shallow
-    doc-link chain graph pointer-jump wins (2.28 vs 2.66 s — fewer,
-    cheaper rounds at diameter ≤ 7). Callers pick by measurement;
-    label SEMANTICS are identical across all delegates (component =
-    smallest reachable id; oracle hashes unchanged, equivalence
-    pinned by test_r15_optimizations). ``max_iter`` bounds
-    contraction/jump rounds (logarithmic), not diameter. The dedup
-    module keeps its own NULL-tolerant min-label loop for the shallow
-    near-dup clusters it was built for (``operators/dedup.py``).
-    """
-    if algo == "pointer_jump":
-        return pointer_jump_components(
-            nodes,
-            edges,
-            node_col=node_col,
-            src_col=src_col,
-            dst_col=dst_col,
-            max_iter=max_iter,
-        )
-    if algo != "star":
-        raise ValueError(f"unknown algo {algo!r}")
-    return star_connected_components(
-        nodes,
-        edges,
-        node_col=node_col,
-        src_col=src_col,
-        dst_col=dst_col,
-        max_iter=max_iter,
-    )
 
 
 def triangle_count(
@@ -347,38 +263,42 @@ def triangle_count(
 
 
 @with_coalesced_cached_rounds
-def star_connected_components(
+def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     *,
     node_col: str = "node",
     src_col: str = "src",
     dst_col: str = "dst",
-    max_iter: int = 60,
+    max_iter: int = 20,
 ) -> DataFrame:
-    """Weakly connected components by ALTERNATING STAR CONTRACTION
-    (the large-star / small-star algorithm of Kiveris et al.,
-    "Connected Components in MapReduce and Beyond") — converges in
-    O(log n) rounds instead of the O(diameter) rounds smallest-label
-    propagation needs. Returns ``(node_col, component)`` with
-    component = smallest node id in the component; singletons keep
-    their own id. Node ids must be non-NULL and totally ordered
-    (ints/strings).
+    """Weakly connected components: every node labeled with the
+    smallest node id reachable over the (undirected) edge set.
+    Returns ``(node_col, component)``; singletons keep their own id.
+    Node ids must be non-NULL and totally ordered (ints or strings).
 
-    Why this exists (round 11): the entity-resolution edit graph at
-    sf0.1 has diameter 50 — min-label propagation needs 50+ rounds
-    (each with a persist/materialize barrier), while star contraction
-    closes it in ~10. At 100 TB a web-graph component's effective
-    diameter is unbounded; a rounds-=-diameter loop is a latent
-    scale-killer, a log-rounds loop is not.
+    Algorithm: ALTERNATING STAR CONTRACTION (the large-star /
+    small-star algorithm of Kiveris et al., "Connected Components in
+    MapReduce and Beyond") — O(log n) rounds instead of the
+    O(diameter) rounds smallest-label propagation needs. The
+    entity-resolution edit graph at sf0.1 has diameter 50: min-label
+    propagation needs 50+ rounds, star contraction closes it in ~10,
+    and at 100 TB a web-graph component's effective diameter is
+    unbounded. This is the engine's one graph CC kernel; a FastSV-style
+    pointer-jumping kernel was measured against it on every catalog
+    caller (4 cores, sf0.01 and sf0.1) and was never measurably faster
+    — every catalog graph is sparse (m ≈ |V|), so its smaller
+    per-round shuffle bought nothing — and was removed. The dedup
+    module keeps its own NULL-tolerant min-label loop
+    (``operators/dedup.py``), which wins on the shallow near-dup
+    clusters it was built for.
 
-    Each round references the previous round's persisted frame a
-    CONSTANT number of times, so the logical plan grows LINEARLY
-    (the dedup-loop lesson: persist caches execution, but Catalyst
-    re-analyzes the whole tree — a per-round self-union doubles it
-    and 2^rounds analysis eats the driver). Symmetrization and the
-    two-sided small-star emit are EXPLODE of a 2-struct array — one
-    reference each, no self-union — and the per-u neighborhood
+    Each round references the previous round's frame ONCE, so the
+    logical plan grows LINEARLY (persist caches execution, but
+    Catalyst re-analyzes the whole tree — a per-round self-union
+    doubles it and 2^rounds analysis eats the driver). Symmetrization
+    and the two-sided small-star emit are EXPLODE of a 2-struct array
+    — one reference each, no self-union — and the per-u neighborhood
     minimum is a window over the high-cardinality node key, not a
     groupBy+join back:
 
@@ -388,21 +308,21 @@ def star_connected_components(
       min(Γ⁻(u) ∪ {u}) — stars re-center on the true minimum.
 
     Convergence = the canonical edge set is the fixed point of both
-    ops, checked exactly (carried equal counts gate a one-sided
-    left_anti emptiness probe — multiset equality over distinct
-    sets, and the expensive job runs only once counts agree); at the fixed
-    point every edge is a star spoke (component-min, member) and
-    labels read directly off it. Per-round persist/materialize/
-    unpersist; raises after ``max_iter`` rounds rather than
-    returning half-merged components (60 ≫ log₂ of any conceivable
-    node count). Per-round work is O(edges); the edge count never
-    exceeds the input's (large-star emits one edge per undirected
-    edge; small-star one per edge plus one per star center, minus
-    the self-spokes both drop).
+    ops, checked exactly by ``session.fixed_point``: the per-round
+    edge count is the measure, and once two counts agree a one-sided
+    left_anti emptiness probe confirms set equality (multiset
+    equality over distinct sets; the expensive job runs only once the
+    cheap signal agrees). At the fixed point every edge is a star
+    spoke (component-min, member) and labels read directly off it.
+    ``max_iter`` bounds contraction rounds (logarithmic), not
+    diameter; the loop raises past it rather than returning
+    half-merged components. Per-round work is O(edges); the edge
+    count never exceeds the input's (large-star emits one edge per
+    undirected edge; small-star one per edge plus one per star
+    center, minus the self-spokes both drop).
     """
     from pyspark.sql.window import Window
 
-    n = nodes.select(F.col(node_col).alias("_n"))
     canon = (
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("a"),
@@ -410,9 +330,7 @@ def star_connected_components(
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
     )
-    canon.count()
 
     def _sym(df: DataFrame) -> DataFrame:
         # both directions from ONE reference (explode, not union)
@@ -430,305 +348,79 @@ def star_connected_components(
         ).select("e.u", "e.v")
 
     w_u = Window.partitionBy("u")
-    prev = canon
-    n_prev = canon.count()
-    try:
-        for _ in range(max_iter):
-            # large-star: one single-reference chain over prev
-            sym = _sym(prev).withColumn(
-                "m", F.least(F.min("v").over(w_u), F.col("u"))
-            )
-            # large-star output is deliberately NOT distinct-ified
-            # (r14 optimization, guide §2.4): each directed row with
-            # v > u emits exactly ONE edge, so the multiset is never
-            # larger than the input edge set — no explosion is
-            # possible — and small-star is duplicate-insensitive (its
-            # window min and per-row emit are unchanged by copies;
-            # its own trailing distinct restores the set). Dropping
-            # the intermediate distinct removes one Exchange from
-            # every contraction round.
-            large = (
-                sym.where(F.col("v") > F.col("u"))
-                .select(
-                    F.least("v", "m").alias("a"),
-                    F.greatest("v", "m").alias("b"),
-                )
-                .where(F.col("a") != F.col("b"))
-            )
-            # small-star: one single-reference chain over large
-            sm = (
-                _sym(large)
-                .where(F.col("v") < F.col("u"))
-                .withColumn("m", F.min("v").over(w_u))
-            )
-            small = (
-                sm.select(
-                    F.explode(
-                        F.array(
-                            F.struct(
-                                F.col("v").alias("x"),
-                                F.col("m").alias("y"),
-                            ),
-                            F.struct(
-                                F.col("u").alias("x"),
-                                F.col("m").alias("y"),
-                            ),
-                        )
-                    ).alias("e")
-                )
-                .select("e.x", "e.y")
-                .where(F.col("x") != F.col("y"))
-                .select(
-                    F.least("x", "y").alias("a"),
-                    F.greatest("x", "y").alias("b"),
-                )
-                .distinct()
-                .persist()
-            )
-            n_small = small.count()
-            # equal counts is carried from the last materialization
-            # (no recount job); the set-equality proof (left_anti on
-            # distinct sets + equal counts => multiset equality) runs
-            # ONLY when counts already match — near convergence, the
-            # cheap signal gates the expensive one
-            converged = n_small == n_prev and (
-                small.join(prev, ["a", "b"], "left_anti")
-                .limit(1)
-                .count()
-                == 0
-            )
-            if prev is not canon:
-                prev.unpersist()
-            prev = small
-            n_prev = n_small
-            if converged:
-                break
-        else:
-            raise RuntimeError(
-                f"star_connected_components did not converge in "
-                f"{max_iter} rounds"
-            )
-        # fixed point: edges are stars (component-min, member)
-        labels = prev.select(
-            F.col("b").alias("_n"), F.col("a").alias("component")
+
+    def one_round(prev: DataFrame) -> DataFrame:
+        # large-star: one single-reference chain over prev
+        sym = _sym(prev).withColumn(
+            "m", F.least(F.min("v").over(w_u), F.col("u"))
         )
-        out = (
-            n.join(labels, "_n", "left")
+        # large-star output is deliberately NOT distinct-ified
+        # (r14 optimization, guide §2.4): each directed row with
+        # v > u emits exactly ONE edge, so the multiset is never
+        # larger than the input edge set — no explosion is
+        # possible — and small-star is duplicate-insensitive (its
+        # window min and per-row emit are unchanged by copies;
+        # its own trailing distinct restores the set). Dropping
+        # the intermediate distinct removes one Exchange from
+        # every contraction round.
+        large = (
+            sym.where(F.col("v") > F.col("u"))
             .select(
-                F.col("_n").alias(node_col),
-                F.coalesce("component", F.col("_n")).alias(
-                    "component"
-                ),
+                F.least("v", "m").alias("a"),
+                F.greatest("v", "m").alias("b"),
             )
+            .where(F.col("a") != F.col("b"))
         )
-        out = out.persist()
-        out.count()
-        return out
-    finally:
-        if prev is not canon:
-            prev.unpersist()
-        canon.unpersist()
-
-
-@with_coalesced_cached_rounds
-def pointer_jump_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    *,
-    node_col: str = "node",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 60,
-) -> DataFrame:
-    """Weakly connected components by HOOKING + POINTER DOUBLING — the
-    Shiloach–Vishkin family as simplified by FastSV (Zhang, Azad,
-    Buluç, "FastSV: A Distributed-Memory Connected Component
-    Algorithm with Fast Convergence", 2020): every node keeps a label
-    ``f`` (initially the minimum over its closed neighborhood) and
-    each round lowers it to
-
-        f'(x) = min( min_{y ∈ Γ(x) ∪ {x}} f(f(y)),      # hooking on
-                                                        # grandparents;
-                                                        # y = x is the
-                                                        # shortcut
-                     min_{u : f(u) = x} min_{y ∈ Γ+(u)} f(f(y)) )
-                                                        # stochastic
-                                                        # hooking onto
-                                                        # the parent
-
-    Labels are non-increasing, never leave the component, and the
-    fixed point is exactly "every node labeled with its component's
-    minimum id" (stars + label equality across every edge), i.e. the
-    same output contract as ``star_connected_components``; singletons
-    keep their own id. Requires integral non-NULL node ids (the exact
-    decimal label-sum is the convergence test); ``connected_components``
-    routes string ids to the star-contraction twin instead.
-
-    Why this replaces star contraction on the hot paths (r15, guide
-    §2.2/§2.4): star contraction re-shuffles the whole EDGE multiset
-    three times per round (two windows + a distinct). Here the edge
-    frame is canonicalized, exploded to directed rows with one SELF
-    row per node, hash-partitioned on the probe key and persisted
-    ONCE — every round then shuffles only label-sized frames (|V|
-    rows): one explode+window to evaluate f∘f with a single reference
-    to the evolving frame (ask rows keyed f(v) meet the value row
-    keyed v — the star-contraction explode trick, so the logical plan
-    grows LINEARLY per round instead of 2^rounds, the round-11
-    lineage law), one join against the static directed frame whose
-    cached exchange is reused, and two hash-aggs whose map-side
-    partial aggregation collapses the edge-sized join output to
-    label-sized exchanges. Round count is O(log n) — pointer doubling
-    covers distance ~2^r and stochastic hooking writes a newly found
-    minimum straight onto a star root (without it, an adversarial id
-    layout degrades to O(diameter) label crawling).
-
-    Convergence is ONE scalar action per step (labels non-increasing
-    ⟹ the exact DECIMAL(38,0) label sum strictly decreases until the
-    fixed point), doubling as the step's persist materialization;
-    ``_JUMPS_PER_STEP`` rounds chain per step (header note). Raises
-    after ``max_iter`` rounds rather than returning half-merged
-    components."""
-    from pyspark.sql.window import Window
-
-    n = nodes.select(F.col(node_col).alias("_n"))
-    id_type = dict(n.dtypes)["_n"]
-    if id_type not in ("tinyint", "smallint", "int", "bigint"):
-        raise ValueError(
-            "pointer_jump_components needs integral node ids for the "
-            f"exact label-sum convergence test; got {id_type}. Use "
-            "star_connected_components for string ids."
-        )
-    canon = edges.select(
-        F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-        F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-    ).where(F.col("a") != F.col("b")).distinct()
-    directed = canon.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a").alias("x"), F.col("b").alias("y")),
-                F.struct(F.col("b").alias("x"), F.col("a").alias("y")),
-            )
-        ).alias("r")
-    ).select("r.x", "r.y")
-    # one SELF row per edged node: the round's single label join then
-    # delivers own-grandparent (the shortcut) and neighbor-grandparents
-    # together, and the self row doubles as the f(x) carrier for the
-    # stochastic-hooking emit. Persisted HASH-PARTITIONED ON THE JOIN
-    # KEY so every round's join reuses the cached exchange and only
-    # the label-sized frame moves (the coreness layout).
-    directed_all = (
-        directed.unionByName(
-            directed.select("x").distinct().withColumn("y", F.col("x"))
-        )
-        .repartition(F.col("y"))
-        .persist()
-    )
-    directed_all.count()
-
-    w_k = Window.partitionBy("_k")
-    null_id = F.lit(None).cast(id_type)
-
-    def one_jump(lbl: DataFrame) -> DataFrame:
-        # f∘f with ONE reference to lbl: each state row (v, f) emits
-        # an ASK row keyed f (asker = v) and a VALUE row keyed v
-        # (val = f); the per-key window max (exactly one non-NULL
-        # value row per key, keys are node ids with state rows)
-        # hands every asker g = f(f(v)), plus its own f for the
-        # stochastic emit below.
-        sym = lbl.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("f").alias("_k"),
-                        F.col("v").alias("_asker"),
-                        null_id.alias("_val"),
-                    ),
-                    F.struct(
-                        F.col("v").alias("_k"),
-                        null_id.alias("_asker"),
-                        F.col("f").alias("_val"),
-                    ),
-                )
-            ).alias("e")
-        ).select("e._k", "e._asker", "e._val")
-        g = (
-            sym.withColumn("_g", F.max("_val").over(w_k))
-            .where(F.col("_asker").isNotNull())
-            .select(
-                F.col("_asker").alias("_v"),
-                F.col("_k").alias("_f"),
-                "_g",
-            )
-        )
-        # per node x: m1 = min grandparent over the closed
-        # neighborhood (covers hooking AND the shortcut; the keep
-        # term is redundant because g(x) <= f(x)), and fx = f(x)
-        # recovered from the self row. Stochastic hooking re-emits
-        # m1 keyed at the parent fx; the second agg folds both
-        # candidate streams.
-        agg1 = (
-            directed_all.join(g, directed_all["y"] == g["_v"])
-            .groupBy("x")
-            .agg(
-                F.min("_g").alias("_m1"),
-                F.max(
-                    F.when(F.col("x") == F.col("y"), F.col("_f"))
-                ).alias("_fx"),
-            )
+        # small-star: one single-reference chain over large
+        sm = (
+            _sym(large)
+            .where(F.col("v") < F.col("u"))
+            .withColumn("m", F.min("v").over(w_u))
         )
         return (
-            agg1.select(
+            sm.select(
                 F.explode(
                     F.array(
                         F.struct(
-                            F.col("x").alias("_c"),
-                            F.col("_m1").alias("_cand"),
+                            F.col("v").alias("x"),
+                            F.col("m").alias("y"),
                         ),
                         F.struct(
-                            F.col("_fx").alias("_c"),
-                            F.col("_m1").alias("_cand"),
+                            F.col("u").alias("x"),
+                            F.col("m").alias("y"),
                         ),
                     )
                 ).alias("e")
             )
-            .select("e._c", "e._cand")
-            .groupBy("_c")
-            .agg(F.min("_cand").alias("f"))
-            .select(F.col("_c").alias("v"), "f")
+            .select("e.x", "e.y")
+            .where(F.col("x") != F.col("y"))
+            .select(
+                F.least("x", "y").alias("a"),
+                F.greatest("x", "y").alias("b"),
+            )
+            .distinct()
         )
 
-    est = (
-        directed_all.groupBy("x")
-        .agg(F.min("y").alias("f"))
-        .select(F.col("x").alias("v"), "f")
-        .persist()
+    def same_edges(prev: DataFrame, nxt: DataFrame) -> bool:
+        # equal counts + nothing in nxt missing from prev => equal
+        # sets (both are distinct)
+        return nxt.join(prev, ["a", "b"], "left_anti").limit(1).count() == 0
+
+    stars = fixed_point(
+        canon,
+        one_round,
+        measure=lambda df: df.count(),
+        max_rounds=max_iter,
+        name="connected_components",
+        confirm=same_edges,
     )
-    prev_sum = est.agg(
-        F.sum(F.col("f").cast("decimal(38,0)"))
-    ).collect()[0][0]
     try:
-        for _ in range(max(1, -(-max_iter // _JUMPS_PER_STEP))):
-            chained = est
-            for _j in range(_JUMPS_PER_STEP):
-                chained = one_jump(chained)
-            nxt = chained.persist()
-            cur_sum = nxt.agg(
-                F.sum(F.col("f").cast("decimal(38,0)"))
-            ).collect()[0][0]
-            est.unpersist()
-            est = nxt
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        else:
-            raise RuntimeError(
-                f"pointer_jump_components did not converge in "
-                f"{max_iter} rounds"
-            )
+        # fixed point: edges are stars (component-min, member)
         out = (
-            n.join(
-                est.select(
-                    F.col("v").alias("_n"), F.col("f").alias("component")
+            nodes.select(F.col(node_col).alias("_n"))
+            .join(
+                stars.select(
+                    F.col("b").alias("_n"), F.col("a").alias("component")
                 ),
                 "_n",
                 "left",
@@ -737,13 +429,12 @@ def pointer_jump_components(
                 F.col("_n").alias(node_col),
                 F.coalesce("component", F.col("_n")).alias("component"),
             )
+            .persist()
         )
-        out = out.persist()
         out.count()
         return out
     finally:
-        est.unpersist()
-        directed_all.unpersist()
+        stars.unpersist()
 
 
 @with_coalesced_cached_rounds
@@ -771,10 +462,11 @@ def k_core(
     list only ever shrinks, and the Catalyst-analyzed plan grows
     LINEARLY with wave count (the star-contraction lesson: a wave
     that references the previous frame three times re-analyzes a
-    3^waves tree). Convergence is a carried
-    edge count (strictly decreasing until the fixed point, so count
-    equality IS the proof here — unlike star contraction, a peel
-    round that removes nothing changes nothing). Round count = peel
+    3^waves tree). Convergence (``session.fixed_point``,
+    ``_WAVES_PER_STEP`` waves per step) is the edge count, strictly
+    decreasing until the fixed point, so count equality IS the proof
+    here — unlike star contraction, a peel round that removes
+    nothing changes nothing. Round count = peel
     DEPTH of the graph (how many cascade waves), which is the known
     cost of exact k-core: bounded by the longest chain of
     dependent deletions, NOT the diameter — for the registered
@@ -790,17 +482,6 @@ def k_core(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .persist()
-    )
-    n_prev = e.count()
-    prev = e
     from pyspark.sql.window import Window
 
     w_x = Window.partitionBy("x")
@@ -835,37 +516,22 @@ def k_core(
             .select("a", "b")
         )
 
-    # TWO peel waves per materialization (the coreness r13 trick).
-    # max_iter contract: the loop runs ceil(max_iter/2) double
-    # steps, so an ODD max_iter admits at most one extra wave
-    # (max_iter+1 total) before raising — the bound is a safety
-    # valve, not an exact budget, and estimates only shrink, so the
-    # extra wave can only land closer to the fixed point:
-    # each wave references its input once, so the chained pair is a
-    # depth-2 single-reference plan — analysis stays linear — while
-    # the per-step persist + count + AQE barriers halve. The count
-    # test stays exact at step granularity: the edge list only
-    # shrinks, so an unchanged count across a double step means both
-    # inner waves removed nothing (at worst one redundant wave runs).
+    core_edges = fixed_point(
+        edges.select(
+            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
+            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
+        )
+        .where(F.col("a") != F.col("b"))
+        .distinct(),
+        one_wave,
+        measure=lambda df: df.count(),
+        rounds_per_step=_WAVES_PER_STEP,
+        max_rounds=max_iter,
+        name="k_core",
+    )
     try:
-        for _ in range(max(1, -(-max_iter // _WAVES_PER_STEP))):
-            chained = prev
-            for _w in range(_WAVES_PER_STEP):
-                chained = one_wave(chained)
-            nxt = chained.persist()
-            n_nxt = nxt.count()
-            if prev is not e:
-                prev.unpersist()
-            prev = nxt
-            if n_nxt == n_prev:
-                break
-            n_prev = n_nxt
-        else:
-            raise RuntimeError(
-                f"k_core did not stabilize in {max_iter} peel rounds"
-            )
         # at the fixed point every incident endpoint holds degree >= k
-        survivors = _directed(prev).select("x").distinct()
+        survivors = _directed(core_edges).select("x").distinct()
         out = (
             nodes.select(F.col(node_col).alias("_n"))
             .join(
@@ -879,14 +545,12 @@ def k_core(
                 F.col("_n").alias(node_col),
                 F.coalesce("in_core", F.lit(False)).alias("in_core"),
             )
+            .persist()
         )
-        out = out.persist()
         out.count()
         return out
     finally:
-        if prev is not e:
-            prev.unpersist()
-        e.unpersist()
+        core_edges.unpersist()
 
 
 @with_coalesced_cached_rounds
@@ -927,11 +591,12 @@ def coreness(
     hash-agg — the h-index folds from a sorted degree-length array
     per node, so no round ever sorts the m-row join output (the r12
     window formulation did, and that exchange+sort was over half the
-    round cost). Convergence is ONE scalar action per round — estimates
-    are non-increasing non-negative integers, so the exact bigint sum
-    is strictly decreasing until the fixed point (sum unchanged ⟺ no
-    estimate changed), and that sum doubles as the round's persist
-    materialization.
+    round cost). Convergence (``session.fixed_point``,
+    ``_WAVES_PER_STEP`` rounds per step) is ONE scalar action per
+    step — estimates are non-increasing non-negative integers, so the
+    exact bigint sum is strictly decreasing until the fixed point (sum
+    unchanged ⟺ no estimate changed), and that sum doubles as the
+    step's persist materialization.
 
     Round count: bounded by the longest chain of dependent estimate
     drops — O(bucket width) on the registered link graph, small on
@@ -977,9 +642,7 @@ def coreness(
         .groupBy("x")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         .select(F.col("x").alias("v"), "c")
-        .persist()
     )
-    prev_sum = est.agg(F.sum("c")).collect()[0][0]
 
     # h-index per node as ONE hash aggregation (r12 shipped this as a
     # row_number window; the window's exchange+SORT of all m rows per
@@ -1022,35 +685,18 @@ def coreness(
             .select(F.col("x").alias("v"), "c")
         )
 
-    # TWO h-index rounds per materialization (max_iter contract:
-    # ceil(max_iter/2) double steps, so an ODD max_iter admits at
-    # most one extra round before raising — safety valve, not an
-    # exact budget; estimates are non-increasing so the extra round
-    # only moves closer to the fixed point): each round still
-    # references its input exactly once, so a 2-round chain is a
-    # depth-2 single-reference plan — analysis stays linear — while
-    # the driver pays HALF the per-step sync cost (persist + scalar
-    # action + AQE stage barriers dominate wall clock on small
-    # graphs; the arithmetic is the same either way). The sum test
-    # stays exact at step granularity: estimates are non-increasing,
-    # so "sum unchanged across a step" still ⟺ both inner rounds
-    # were no-ops ⟺ fixed point (at worst one redundant round runs).
     try:
-        for _ in range(max(1, -(-max_iter // _WAVES_PER_STEP))):
-            chained = est
-            for _w in range(_WAVES_PER_STEP):
-                chained = one_round(chained)
-            nxt = chained.persist()
-            cur_sum = nxt.agg(F.sum("c")).collect()[0][0]
-            est.unpersist()
-            est = nxt
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        else:
-            raise RuntimeError(
-                f"coreness did not stabilize in {max_iter} rounds"
-            )
+        est = fixed_point(
+            est,
+            one_round,
+            measure=lambda df: df.agg(F.sum("c")).collect()[0][0],
+            rounds_per_step=_WAVES_PER_STEP,
+            max_rounds=max_iter,
+            name="coreness",
+        )
+    finally:
+        directed_all.unpersist()
+    try:
         out = (
             nodes.select(F.col(node_col).alias("_n"))
             .join(
@@ -1067,13 +713,12 @@ def coreness(
                 .cast("bigint")
                 .alias("coreness"),
             )
+            .persist()
         )
-        out = out.persist()
         out.count()
         return out
     finally:
         est.unpersist()
-        directed_all.unpersist()
 
 
 def neighborhood_growth(

@@ -73,6 +73,20 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """Driver heap: $SPARK_GRAFT_DRIVER_MEM, else half of physical RAM,
+    at most 16g. A heap near or above RAM lets the JVM grow past what
+    the host has before it collects, and the kernel OOM-kills it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "16g"
+    return f"{min(16 << 10, ram // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "pyspark-datalake-engine",
     master: str | None = None,
@@ -93,9 +107,7 @@ def get_spark(
     confs.update(_SCALE_CONFS)
     confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
     confs["spark.ui.enabled"] = "false"
-    confs["spark.driver.memory"] = os.environ.get(
-        "SPARK_GRAFT_DRIVER_MEM", "16g"
-    )
+    confs["spark.driver.memory"] = default_driver_memory()
     if extra_confs:
         confs.update(extra_confs)
     for k, v in confs.items():
@@ -182,3 +194,75 @@ def with_coalesced_cached_rounds(fn):
             return fn(*args, **kwargs)
 
     return wrapper
+
+
+def fixed_point(
+    frame,
+    step,
+    *,
+    measure,
+    rounds_per_step: int = 1,
+    max_rounds: int,
+    name: str,
+    confirm=None,
+):
+    """Iterate ``step`` from ``frame`` to its fixed point and return the
+    final frame, persisted and materialized; the caller owns it.
+
+    The helper persists ``frame`` and owns it, and every later frame,
+    from the call on: each step chains ``rounds_per_step`` calls of
+    ``step`` into one lazily built plan, persists it and runs
+    ``measure`` (a scalar action — count, an exact sum) once, which
+    also materializes the step. The previous frame is released right
+    after, so at most two loop frames are cached at any moment, and
+    on every exit path — convergence, the bound, an error — nothing
+    but the returned frame stays cached.
+
+    Cadence: per-step persist + scalar action + AQE stage barriers
+    dominate wall clock on small per-round frames, so fewer
+    materializations with deeper chains win. Every ``step`` must
+    reference its input exactly once, so an R-round chain is a
+    depth-R single-reference plan and Catalyst analysis stays linear
+    (a round that references its input twice re-analyzes a 2^rounds
+    tree; this engine bans ``localCheckpoint`` as the way out).
+
+    Exactness at step granularity: ``measure`` must be monotone per
+    round and strictly so until the fixed point (edge counts that only
+    shrink, label or estimate sums that only fall), so "unchanged
+    across a step" means every inner round was a no-op — the fixed
+    point; at worst R - 1 redundant rounds run after convergence.
+    Where an unchanged measure does not prove it (star contraction:
+    the edge count can hold while the edge set still changes),
+    ``confirm(prev, nxt)`` runs only once the measures agree, before
+    ``prev`` is released, and must return True at the fixed point.
+
+    ``max_rounds`` contract: ``ceil(max_rounds / rounds_per_step)``
+    steps run before ``RuntimeError`` is raised, so up to R - 1 rounds
+    past ``max_rounds`` may execute — a safety valve against
+    pathological inputs, not an exact budget. The loop raises rather
+    than return a half-converged frame."""
+    cur = frame.persist()
+    try:
+        last = measure(cur)
+        for _ in range(-(-max_rounds // rounds_per_step)):
+            nxt = cur
+            for _r in range(rounds_per_step):
+                nxt = step(nxt)
+            nxt = nxt.persist()
+            try:
+                value = measure(nxt)
+                done = value == last and (
+                    confirm is None or confirm(cur, nxt)
+                )
+            finally:
+                cur.unpersist()
+                cur = nxt
+            if done:
+                return cur
+            last = value
+        raise RuntimeError(
+            f"{name} did not converge in {max_rounds} rounds"
+        )
+    except BaseException:
+        cur.unpersist()
+        raise

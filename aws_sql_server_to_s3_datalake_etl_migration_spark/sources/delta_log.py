@@ -11,11 +11,12 @@ newline-delimited-JSON action format from the public Delta protocol
 spec (delta.io PROTOCOL.md) — so fallback-written tables get
 
 - **atomic, isolated commits** with OPTIMISTIC CONCURRENCY: a writer
-  claims version N by atomically renaming a fully-written temp file to
-  ``_delta_log/N.json``; rename-to-existing fails on local/HDFS
-  filesystems, so losing a race is detected, the winner's commit is
-  re-read, and the loser retries at N+1 — the same claim protocol
-  delta-spark's HDFSLogStore runs. (Object stores without atomic
+  claims version N by atomically moving a fully-written temp file to
+  ``_delta_log/N.json`` only if that slot is free (:func:`_claim`:
+  HDFS rename, a hard link on local filesystems), so losing a race is
+  detected, the winner's commit is re-read, and the loser retries at
+  N+1 — the same claim protocol delta-spark's HDFSLogStore runs.
+  (Object stores without atomic
   rename-if-absent need a coordinating LogStore; same caveat as
   open-source Delta on S3 — documented, not hidden.)
 - **copy-on-write MERGE with tombstones**: the merge commit removes the
@@ -74,6 +75,7 @@ fallback path.
 from __future__ import annotations
 
 import json
+import os
 import time
 import uuid
 import warnings
@@ -120,6 +122,26 @@ def _write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
         out.close()
 
 
+def _claim(fs, hpath, src: str, dest: str) -> bool:
+    """Move ``src`` to ``dest`` unless ``dest`` exists; of any number of
+    racing claims on one ``dest`` exactly one wins. Hadoop's local
+    filesystem checks that ``dest`` is absent and then renames, so two
+    racers can both pass the check and the second rename(2) replaces
+    the first one's commit. There the claim is a hard link instead:
+    link(2) refuses an existing ``dest`` atomically, and the caller
+    deletes ``src``. HDFS refuses a rename onto an existing file."""
+    if fs.getScheme() != "file":
+        return fs.rename(hpath(src), hpath(dest))
+    src_p, dest_p = (
+        fs.makeQualified(hpath(p)).toUri().getPath() for p in (src, dest)
+    )
+    try:
+        os.link(src_p, dest_p)
+    except FileExistsError:
+        return False
+    return True
+
+
 class CommitConflict(Exception):
     """Another writer committed the version this transaction read its
     snapshot at — the caller must re-read and redo its reconciliation
@@ -153,8 +175,8 @@ def commit(
     """Atomically commit ``actions`` as the table's next version and
     return it. The action list is serialized ONCE to a temp file inside
     ``_delta_log`` (ignored by replay: the name never matches
-    ``NNN.json``), then renamed into the next free version slot —
-    rename is the atomic claim, so two racing writers serialize into
+    ``NNN.json``), then moved into the next free version slot —
+    :func:`_claim` is atomic, so two racing writers serialize into
     consecutive versions instead of clobbering each other.
 
     ``expected_version`` pins the claim to exactly that slot: commits
@@ -191,8 +213,8 @@ def commit(
     _write_bytes(spark, tmp, payload)
     try:
         if expected_version is not None:
-            dest = hpath(f"{log_dir}/{expected_version:020d}.json")
-            if fs.rename(hpath(tmp), dest):
+            dest = f"{log_dir}/{expected_version:020d}.json"
+            if _claim(fs, hpath, tmp, dest):
                 return expected_version
             raise CommitConflict(
                 f"version {expected_version} of {table_path} was claimed "
@@ -202,8 +224,8 @@ def commit(
         for _ in range(max_retries):
             v = log_version(spark, base)
             next_v = 0 if v is None else v + 1
-            dest = hpath(f"{log_dir}/{next_v:020d}.json")
-            if fs.rename(hpath(tmp), dest):
+            dest = f"{log_dir}/{next_v:020d}.json"
+            if _claim(fs, hpath, tmp, dest):
                 return next_v
             # lost the race for next_v (or a writer landed between the
             # listing and the rename) — re-list and try the next slot

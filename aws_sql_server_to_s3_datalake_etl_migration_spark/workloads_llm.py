@@ -4381,12 +4381,9 @@ def doc_link_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     diameter-2 star edges.
 
     The Spark side runs the REAL iterative machinery
-    (``graph.connected_components`` — with ``algo="pointer_jump"``
-    since r15: hooking + pointer doubling whose rounds shuffle
-    label-sized frames; on this shallow chain graph (diameter ≤ 7,
-    few cheap rounds) the same-session A/B measured 2.28 vs the star
-    delegate's 2.66 s, labels identical); the oracle's window runs
-    over the ~|docs|-row id list on the DuckDB side only. Component
+    (``graph.connected_components``, star contraction — the same
+    kernel ``customer_entity_resolution`` uses); the oracle's window
+    runs over the ~|docs|-row id list on the DuckDB side only. Component
     sizes come from one hash-agg joined back on the component id
     (both sides fact-partitioned keys, no window on the Spark
     side)."""
@@ -4403,9 +4400,7 @@ def doc_link_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     comps = connected_components(
-        d.select(F.col("doc_id").alias("node")),
-        edges,
-        algo="pointer_jump",
+        d.select(F.col("doc_id").alias("node")), edges
     )
     sizes = comps.groupBy("component").agg(
         F.count(F.lit(1)).cast("bigint").alias("component_size")

@@ -905,6 +905,42 @@ def test_mutations_race_appends_linearizably(spark, tmp_path):
     assert read_delta(spark, path, version=head).count() == len(expected)
 
 
+def test_racing_claims_on_one_version_have_one_winner(spark, tmp_path):
+    """Writers pinned to the same version slot: exactly one commit
+    lands and the slot holds its actions; every other writer gets
+    CommitConflict. A check-then-rename claim lets two racers both
+    "win" and the later rename replaces the earlier commit."""
+    import threading
+
+    for trial in range(40):
+        path = str(tmp_path / f"t_claim{trial}")
+        won, lost = [], []
+        gate = threading.Barrier(4)
+
+        def writer(i: int) -> None:
+            gate.wait()
+            try:
+                delta_log.commit(
+                    spark, path, [{"commitInfo": {"writer": i}}],
+                    expected_version=0,
+                )
+                won.append(i)
+            except delta_log.CommitConflict:
+                lost.append(i)
+
+        threads = [
+            threading.Thread(target=writer, args=(i,)) for i in range(4)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert len(won) == 1 and len(lost) == 3, (trial, won)
+        landed = delta_log._commit_actions(spark, path, 0)
+        assert landed == [{"commitInfo": {"writer": won[0]}}]
+        assert _log_jsons(path) == [f"{0:020d}.json"]
+
+
 def test_fsck_reports_each_corruption_class(spark, tmp_path):
     """fsck: clean on a healthy table (tombstoned-but-unvacuumed files
     are a warning list, not an error); detects a vacuumed-live file,

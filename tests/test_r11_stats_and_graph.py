@@ -1,19 +1,23 @@
 """Round-11 additions (second + third batch): triangle counting, the
 KS two-sample drift test, the block jackknife CI, the l-diversity
-audit, per-key OLS, entity resolution, the median CI,
-star-contraction WCC, k-core peeling, target encoding, and the
-temporal embargo split — each pinned on tiny crafted inputs against
-hand-computed or pure-Python brute-force expectations (the oracle
-harness cross-checks the same queries against DuckDB at sf0.01;
-these pin SEMANTICS)."""
+audit, per-key OLS, entity resolution, the median CI, connected
+components (star contraction and dedup's min-label loop), k-core
+peeling, target encoding, and the temporal embargo split — each
+pinned on tiny crafted inputs against hand-computed or pure-Python
+brute-force expectations (the oracle harness cross-checks the same
+queries against DuckDB at sf0.01; these pin SEMANTICS)."""
 
 from __future__ import annotations
 
 import itertools
+import random
 
+import pytest
 from pyspark.sql import functions as F
 
+from aws_sql_server_to_s3_datalake_etl_migration_spark.operators import dedup
 from aws_sql_server_to_s3_datalake_etl_migration_spark.operators.graph import (
+    connected_components,
     triangle_count,
 )
 from aws_sql_server_to_s3_datalake_etl_migration_spark import (
@@ -363,7 +367,7 @@ def test_median_ci_hand_case(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# star_connected_components
+# connected components: graph (star contraction) and dedup (min-label)
 # ---------------------------------------------------------------------------
 
 
@@ -394,30 +398,119 @@ def _wcc_mirror(nodes, edges):
     return out
 
 
+def _graph_cases():
+    rng = random.Random(1234)
+    return {
+        # min id attached as a leaf at the FAR end of a path whose ids
+        # ascend away from it — a diameter-40 crawl for label-based
+        # kernels
+        "caterpillar": (
+            list(range(0, 41)),
+            [(i, i + 1) for i in range(1, 40)] + [(40, 0)],
+        ),
+        "cliques_pairs_singletons": (
+            list(range(60)),
+            [(i, j) for i in range(8) for j in range(i + 1, 8)]
+            + [(30 + 2 * i, 31 + 2 * i) for i in range(5)],
+        ),
+        "random200": (
+            list(range(200)),
+            [
+                (rng.randrange(200), rng.randrange(200))
+                for _ in range(160)
+            ],
+        ),
+        "selfloops_dups_reversed": (
+            list(range(12)),
+            [(5, 5), (1, 2), (2, 1), (1, 2), (7, 3), (3, 9)],
+        ),
+        "star_high_center": (
+            list(range(50)),
+            [(49, i) for i in range(15)],
+        ),
+    }
+
+
+def _graph_cc(ndf, edf):
+    return connected_components(ndf, edf)
+
+
+def _dedup_cc(ndf, edf):
+    return dedup.connected_components(
+        edf.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b")),
+        ndf,
+        "node",
+    ).select("node", F.col("cluster_id").alias("component"))
+
+
+_CC_KERNELS = {"graph": _graph_cc, "dedup": _dedup_cc}
+# dedup's min-label loop needs diameter-many rounds (41 on the
+# caterpillar, 21 on random200) and its per-round planning cost grows
+# with depth: a 10-round chain takes ~40 s and a 40-round one exhausts
+# the driver heap. Deep graphs are graph.connected_components' job.
+_DEEP_FOR_MIN_LABEL = {"caterpillar", "random200"}
+
+
+@pytest.mark.parametrize(
+    "case,kernel",
+    [
+        pytest.param(case, kernel, id=f"{case}-{kernel}")
+        for case in sorted(_graph_cases())
+        for kernel in sorted(_CC_KERNELS)
+        if not (kernel == "dedup" and case in _DEEP_FOR_MIN_LABEL)
+    ],
+)
+def test_cc_kernels_match_union_find(spark, case, kernel):
+    nodes, edges = _graph_cases()[case]
+    ndf = spark.createDataFrame([(n,) for n in nodes], "node bigint")
+    edf = spark.createDataFrame(edges, "src bigint, dst bigint")
+    got = {
+        r["node"]: r["component"]
+        for r in _CC_KERNELS[kernel](ndf, edf).collect()
+    }
+    assert got == _wcc_mirror(nodes, edges)
+
+
+def test_connected_components_no_edges_all_singletons(spark):
+    ndf = spark.createDataFrame([(i,) for i in range(5)], "node bigint")
+    edf = spark.createDataFrame(
+        [(0, 0)], "src bigint, dst bigint"
+    ).where(F.lit(False))
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(ndf, edf).collect()
+    }
+    assert got == {i: i for i in range(5)}
+
+
+def test_connected_components_serves_string_ids(spark):
+    ndf = spark.createDataFrame(
+        [("a",), ("b",), ("c",)], "node string"
+    )
+    edf = spark.createDataFrame([("a", "b")], "src string, dst string")
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(ndf, edf).collect()
+    }
+    assert got == {"a": "a", "b": "a", "c": "c"}
+
+
 def test_star_wcc_long_path_converges_in_log_rounds(spark):
     # a 120-node path: diameter 119 -- min-label propagation would
     # need 119 rounds; star contraction must close it inside the
-    # default 60 (in practice ~10)
-    from aws_sql_server_to_s3_datalake_etl_migration_spark.operators.graph import (
-        star_connected_components,
-    )
-
+    # default 20 (in practice ~10)
     nodes = list(range(120))
     edges = [(i, i + 1) for i in range(119)]
     ndf = spark.createDataFrame([(n,) for n in nodes], "node long")
     edf = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r["node"]: r["component"]
-        for r in star_connected_components(ndf, edf).collect()
+        for r in connected_components(ndf, edf).collect()
     }
     assert got == {n: 0 for n in nodes}
 
 
 def test_star_wcc_matches_union_find_on_mixed_graph(spark):
-    from aws_sql_server_to_s3_datalake_etl_migration_spark.operators.graph import (
-        star_connected_components,
-    )
-
     # deterministic pseudo-random graph: multiple components, a
     # cycle, a binary-ish tree, duplicate + reversed edges, isolates
     # (roster covers the modular edges' max endpoint, 61)
@@ -432,18 +525,13 @@ def test_star_wcc_matches_union_find_on_mixed_graph(spark):
     ndf = spark.createDataFrame([(n,) for n in nodes], "node long")
     got = {
         r["node"]: r["component"]
-        for r in star_connected_components(ndf, edf).collect()
+        for r in connected_components(ndf, edf).collect()
     }
     assert got == _wcc_mirror(nodes, [(a, b) for a, b in edges if a != b])
 
 
 def test_graph_connected_components_delegates_same_labels(spark):
-    # the public connected_components must keep the min-label
-    # semantics after the star-contraction upgrade
-    from aws_sql_server_to_s3_datalake_etl_migration_spark.operators.graph import (
-        connected_components,
-    )
-
+    # the public connected_components keeps the min-label semantics
     nodes = [1, 2, 3, 4, 5, 9]
     edges = [(1, 2), (2, 3), (4, 5)]
     ndf = spark.createDataFrame([(n,) for n in nodes], "node long")

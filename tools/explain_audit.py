@@ -924,9 +924,10 @@ EXPECT: dict[str, dict] = {
     "doc_bpe_token_ids": {
         "pushed": False, "no_smj": True, "hints": 5, "pure_jvm": True,
     },
-    # chain-graph WCC (r11): labels come back as a localCheckpoint
-    # leaf (lineage truncated per round — the exponential-analysis
-    # fix); component sizes are one hash-agg equi-joined back
+    # chain-graph WCC (r11): labels come back as a persisted
+    # InMemoryTableScan leaf (star contraction materialized per round
+    # by session.fixed_point); component sizes are one hash-agg
+    # equi-joined back
     "doc_link_components": {
         "pushed": False, "no_smj": False, "hints": 0, "pure_jvm": True,
     },
